@@ -9,57 +9,49 @@ contracts:
   median_date, min_date, max_date, count, proportion,
   abs_proportion_change, rel_mean_change, rel_median_change)``
 
-All inputs here are *already aggregated* (rows ~= years x varnames
-[x top-9 values]) — driver-scale data, so window functions over tiny
-partitions and broadcast template joins are free regardless of raw size.
+All inputs here are *already aggregated* (rows ~= periods x varnames
+[x top-k values]). Each stage is one ``selectExpr`` of SQL text, so
+building an arm costs a few py4j calls instead of one per Column node.
+
+Dense completion (CJ(...) :1578-1582,1608-1612; SURVEY §2.10.7) needs no
+cross join, join or cache: the missingness profile is complete by
+construction (the fused aggregate stacks every column for every period),
+and the categorical grid is completed per (varname, value) group against
+the period list that the gate query returns (see
+:meth:`~apde_etl_spark.operators.profile.CombinedProfile.gate_estimates`).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from apde_etl_spark.functions.core import change_flag_abs, change_flag_rel, null_scrub, round_half_away
+from apde_etl_spark.functions.core import (
+    change_flag_abs_sql,
+    change_flag_rel_sql,
+    null_scrub_sql,
+    round_half_away_sql,
+)
+
+_BY_VARNAME = "(PARTITION BY varname ORDER BY time_period)"
 
 
-def complete_grid(actuals: DataFrame, fill_zero: dict[str, object] | None = None,
-                  value_dim: bool = False) -> DataFrame:
-    """Dense (time_period x varname [x value]) completion
-    (CJ(...) :1578-1582,1608-1612; SURVEY §2.10.7: the value dimension
-    expands only (varname, value) pairs observed in *some* period).
-    """
-    # actuals feeds THREE subtrees (times, dims, the join probe); without
-    # a cache boundary each one re-computes the whole upstream
-    # aggregation — 3 base-table scans instead of 1. The frame is tiny
-    # (already aggregated), so persisting is O(years x varnames).
-    actuals = actuals.persist()
-    times = actuals.select("time_period").distinct()
-    if value_dim:
-        dims = actuals.select("varname", "value").distinct()
-    else:
-        dims = actuals.select("varname").distinct()
-    grid = times.crossJoin(dims)
-    keys = grid.columns
-    out = grid.join(actuals, on=keys, how="left")
-    for c, v in (fill_zero or {}).items():
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
-    return out
+def _rounded(x: str, digits: int) -> str:
+    return round_half_away_sql(null_scrub_sql(x), digits)
 
 
 def finalize_missingness(miss: DataFrame, abs_threshold: float = 3.0,
                          digits_prop: int = 3) -> DataFrame:
-    """Template-complete, add lag-1 abs_change flag (:1535-1539), round."""
-    dense = complete_grid(miss, fill_zero={"nrow": 0, "proportion": 0.0})
-    w = Window.partitionBy("varname").orderBy("time_period")
-    out = dense.withColumn(
-        "abs_change",
-        change_flag_abs(F.col("proportion"), F.lag("proportion").over(w), abs_threshold),
-    )
-    return out.select(
-        "time_period", "varname", F.col("nrow").cast("long").alias("nrow"),
-        round_half_away(null_scrub("proportion"), digits_prop).alias("proportion"),
-        "abs_change",
+    """Add the lag-1 abs_change flag (:1535-1539) and round. ``miss``
+    must hold every (time_period, varname) pair, as the missingness
+    profiles in :mod:`~apde_etl_spark.operators.profile` do."""
+    lagged = miss.selectExpr("*", f"lag(proportion) OVER {_BY_VARNAME} AS __prev")
+    return lagged.selectExpr(
+        "time_period", "varname", "CAST(nrow AS BIGINT) AS nrow",
+        f"{_rounded('proportion', digits_prop)} AS proportion",
+        f"{change_flag_abs_sql('proportion', '__prev', abs_threshold)} AS abs_change",
     ).orderBy("varname", "time_period")
 
 
@@ -67,33 +59,44 @@ def finalize_continuous(stats: DataFrame, rel_threshold: float = 10.0,
                         digits_mean: int = 2) -> DataFrame:
     """Rel-change flags on mean and median (:1585-1596), half-away
     rounding (:1597-1600), NaN/Inf scrub (:1641-1642)."""
-    w = Window.partitionBy("varname").orderBy("time_period")
-    out = (
-        stats
-        .withColumn("rel_mean_change",
-                    change_flag_rel(F.col("mean"), F.lag("mean").over(w), rel_threshold))
-        .withColumn("rel_median_change",
-                    change_flag_rel(F.col("median"), F.lag("median").over(w), rel_threshold))
+    lagged = stats.selectExpr(
+        "*", f"lag(mean) OVER {_BY_VARNAME} AS __pmean",
+        f"lag(median) OVER {_BY_VARNAME} AS __pmedian",
     )
-    for c in ("mean", "median", "min", "max"):
-        out = out.withColumn(c, round_half_away(null_scrub(c), digits_mean))
-    return out
+    return lagged.selectExpr(
+        "time_period", "varname",
+        *[f"{_rounded(c, digits_mean)} AS {c}" for c in ("mean", "median", "min", "max")],
+        f"{change_flag_rel_sql('mean', '__pmean', rel_threshold)} AS rel_mean_change",
+        f"{change_flag_rel_sql('median', '__pmedian', rel_threshold)} AS rel_median_change",
+    )
 
 
-def finalize_categorical(freq_top: DataFrame, abs_threshold: float = 3.0,
+def finalize_categorical(freq_top: DataFrame, periods: str, abs_threshold: float = 3.0,
                          digits_prop: int = 3) -> DataFrame:
     """Per (varname, value) completion across periods with zero-fill, then
-    abs-proportion-change flags over time (:1549-1568)."""
-    dense = complete_grid(freq_top, fill_zero={"count": 0, "proportion": 0.0}, value_dim=True)
-    w = Window.partitionBy("varname", "value").orderBy("time_period")
-    out = dense.withColumn(
-        "abs_proportion_change",
-        change_flag_abs(F.col("proportion"), F.lag("proportion").over(w), abs_threshold),
+    abs-proportion-change flags over time (:1549-1568).
+
+    ``periods`` is SQL text of an array holding every time period. One
+    groupBy(varname, value) gathers the periods a pair was seen in, the
+    absent ones are zero-filled, and the array is sorted by period
+    (NULL first, as an ascending window orders it) so each row's lag-1
+    predecessor is the element before it. Matching is null-safe, so a
+    NULL value or NULL period keeps its counts."""
+    seen = freq_top.groupBy("varname", "value").agg(
+        F.expr("collect_list(named_struct('time_period', time_period, "
+               "'count', `count`, 'proportion', proportion)) AS __e"))
+    zeros = (f"transform(array_except({periods}, transform(__e, x -> x.time_period)), "
+             "p -> named_struct('time_period', p, 'count', 0L, 'proportion', 0.0D))")
+    prev = "IF(i = 0, NULL, __d[i - 1].proportion)"
+    row = (
+        "named_struct('time_period', x.time_period, 'varname', varname, 'value', value, "
+        "'count', x.`count`, "
+        f"'proportion', {_rounded('x.proportion', digits_prop)}, "
+        f"'abs_proportion_change', {change_flag_abs_sql('x.proportion', prev, abs_threshold)})"
     )
-    return out.select(
-        "time_period", "varname", "value", F.col("count").cast("long").alias("count"),
-        round_half_away(null_scrub("proportion"), digits_prop).alias("proportion"),
-        "abs_proportion_change",
+    return (
+        seen.selectExpr("varname", "value", f"array_sort(concat(__e, {zeros})) AS __d")
+        .selectExpr(f"inline(transform(__d, (x, i) -> {row}))")
     )
 
 
@@ -102,17 +105,12 @@ def stack_values(categorical: DataFrame | None, continuous: DataFrame | None,
     """U3 — stack the three profile tables into one ``values`` relation
     with a ``vartype`` tag, padding absent columns with NULL
     (rbindlist fill=TRUE, :1625-1636) via unionByName."""
-    parts = []
-    if categorical is not None:
-        parts.append(categorical.withColumn("vartype", F.lit("Categorical")))
-    if continuous is not None:
-        parts.append(continuous.withColumn("vartype", F.lit("Continuous")))
-    if date is not None:
-        parts.append(date.withColumn("vartype", F.lit("Date")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    parts = [
+        df.selectExpr("*", f"'{tag}' AS vartype")
+        for df, tag in ((categorical, "Categorical"), (continuous, "Continuous"), (date, "Date"))
+        if df is not None
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
 def all_missing_vars(miss: DataFrame) -> DataFrame:

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from apde_etl_spark.functions.core import sql_ident, sql_string
+from apde_etl_spark.operators.cache import tracked_persist, tracked_release
 from apde_etl_spark.operators.reshape import melt_long
 
 #: epoch anchor used to turn dates into day offsets for exact-median math
@@ -158,17 +160,13 @@ def _float_cols(df: DataFrame, cols: Sequence[str]) -> list[str]:
             if f.name in want and f.dataType.typeName() in ("float", "double")]
 
 
-def _stack_label(c: str) -> str:
-    """Escape a column name for interpolation as a stack() string label.
-    Single quotes double; backticks cannot be escaped inside a quoted
-    identifier reference, so reject them with a clear error instead of
-    generating corrupt SQL."""
-    if "`" in c:
-        raise ValueError(f"column name {c!r} contains a backtick — unsupported")
-    return c.replace("'", "''")
+def _aggregate(df: DataFrame, key: Column, aggs: Sequence[str]) -> DataFrame:
+    """``groupBy(key AS time_period)`` over SQL-text aggregates — one
+    py4j call per aggregate instead of one per Column node."""
+    return df.groupBy(key.alias("time_period")).agg(*[F.expr(a) for a in aggs])
 
 
-def _miss_aggs(cols: Sequence[str], nan_cols: Sequence[str] = ()) -> list[Column]:
+def _miss_aggs(cols: Sequence[str], nan_cols: Sequence[str] = ()) -> list[str]:
     """NULL counts per column; for float/double columns (``nan_cols``)
     NaN counts as missing too — R's ``is.na(NaN)`` is TRUE, and a NaN
     that is neither missing nor aggregable would otherwise poison the
@@ -176,21 +174,14 @@ def _miss_aggs(cols: Sequence[str], nan_cols: Sequence[str] = ()) -> list[Column
     nanset = set(nan_cols)
     out = []
     for c in cols:
-        miss = F.col(c).isNull()
-        if c in nanset:
-            miss = miss | F.isnan(F.col(c))
-        out.append(F.sum(miss.cast("long")).alias(f"{c}__nnull"))
+        miss = f"{sql_ident(c)} IS NULL" + (f" OR isnan({sql_ident(c)})" if c in nanset else "")
+        out.append(f"sum(CAST(({miss}) AS BIGINT)) AS {sql_ident(c + '__nnull')}")
     return out
 
 
 def _miss_from_wide(wide: DataFrame, cols: Sequence[str]) -> DataFrame:
-    pairs = ", ".join(f"'{_stack_label(c)}', `{c}__nnull`" for c in cols)
-    stack = f"stack({len(cols)}, {pairs}) as (varname, nrow)"
-    return wide.select("time_period", "__total", F.expr(stack)).select(
-        "time_period",
-        "varname",
-        "nrow",
-        (F.col("nrow") / F.col("__total")).alias("proportion"),
+    return _stack_wide(wide, cols, ("__nnull",), ("nrow",), "__total").selectExpr(
+        "time_period", "varname", "nrow", "nrow / __total AS proportion"
     )
 
 
@@ -204,9 +195,7 @@ def missingness_profile(df: DataFrame, time_col: str | Column, cols: Sequence[st
     (SURVEY §2.10.3).
     """
     t = F.col(time_col) if isinstance(time_col, str) else time_col
-    wide = df.groupBy(t.alias("time_period")).agg(
-        *_miss_aggs(cols, _float_cols(df, cols)), F.count(F.lit(1)).alias("__total")
-    )
+    wide = _aggregate(df, t, [*_miss_aggs(cols, _float_cols(df, cols)), "count(1) AS __total"])
     return _miss_from_wide(wide, cols)
 
 
@@ -235,43 +224,46 @@ def numeric_stats(
     sizes swap for ``approx_percentile`` via the ``exact_median`` flag.
     """
     t = F.col(time_col) if isinstance(time_col, str) else time_col
-    wide = df.groupBy(t.alias("time_period")).agg(*_numeric_aggs(cols, exact_median))
-    return _numeric_from_wide(wide, cols)
+    return _numeric_from_wide(_aggregate(df, t, _numeric_aggs(cols, exact_median)), cols)
 
 
 def _numeric_aggs(
     cols: Sequence[str], exact_median: bool = True, include_median: bool = True
-) -> list[Column]:
-    aggs: list[Column] = []
+) -> list[str]:
+    aggs: list[str] = []
     for c in cols:
         # nanvl: NaN -> NULL so every aggregate ignores it (na.rm
         # semantics — one NaN must not turn the period mean into NaN)
-        d = F.nanvl(F.col(c).cast("double"), F.lit(None).cast("double"))
-        aggs.append(F.avg(d).alias(f"{c}__mean"))
+        d = f"nanvl(CAST({sql_ident(c)} AS DOUBLE), CAST(NULL AS DOUBLE))"
+        aggs.append(f"avg({d}) AS {sql_ident(c + '__mean')}")
         if include_median:
             if exact_median:
-                med = F.percentile(d, F.lit(0.5))
+                med = f"percentile({d}, 0.5D)"
             else:
                 # the 100 TB escape hatch: GK-sketch quantile, fixed-size
                 # state per (group x column) instead of all values buffered
                 # in the aggregate; rank error <= 1/accuracy of the group
-                med = F.percentile_approx(d, F.lit(0.5), F.lit(10000)).cast("double")
-            aggs.append(med.alias(f"{c}__median"))
-        aggs += [
-            F.min(d).alias(f"{c}__min"),
-            F.max(d).alias(f"{c}__max"),
-        ]
+                med = f"CAST(percentile_approx({d}, 0.5D, 10000) AS DOUBLE)"
+            aggs.append(f"{med} AS {sql_ident(c + '__median')}")
+        aggs += [f"min({d}) AS {sql_ident(c + '__min')}", f"max({d}) AS {sql_ident(c + '__max')}"]
     return aggs
 
 
+def _stack_wide(wide: DataFrame, cols: Sequence[str], fields: Sequence[str],
+                names: Sequence[str], *extra: str) -> DataFrame:
+    """Stack per-column aggregates ``{c}{field}`` of the one-row-per-
+    period ``wide`` frame into rows ``(time_period, varname, *names)``."""
+    rows = ", ".join(
+        ", ".join([sql_string(c), *[sql_ident(c + f) for f in fields]]) for c in cols
+    )
+    return wide.selectExpr(
+        "time_period", f"stack({len(cols)}, {rows}) AS (varname, {', '.join(names)})", *extra
+    )
+
+
 def _numeric_from_wide(wide: DataFrame, cols: Sequence[str]) -> DataFrame:
-    pairs = ", ".join(
-        f"\'{_stack_label(c)}\', `{c}__mean`, `{c}__median`, `{c}__min`, `{c}__max`" for c in cols
-    )
-    stack = (
-        f"stack({len(cols)}, {pairs}) as (varname, mean, median, min, max)"
-    )
-    return wide.select("time_period", F.expr(stack))
+    return _stack_wide(wide, cols, ("__mean", "__median", "__min", "__max"),
+                       ("mean", "median", "min", "max"))
 
 
 def exact_median_histogram(
@@ -337,42 +329,41 @@ def date_stats(df: DataFrame, time_col: str | Column, cols: Sequence[str]) -> Da
     to Date (:729).
     """
     t = F.col(time_col) if isinstance(time_col, str) else time_col
-    wide = df.groupBy(t.alias("time_period")).agg(*_date_aggs(cols))
-    return _date_from_wide(wide, cols)
+    return _date_from_wide(_aggregate(df, t, _date_aggs(cols)), cols)
+
+
+#: day offset of a date expression from the epoch anchor
+_DAYS = "CAST(datediff({}, DATE '" + _EPOCH + "') AS DOUBLE)"
 
 
 def _date_aggs(
     cols: Sequence[str],
     include_median: bool = True,
     exact_median: bool = True,
-) -> list[Column]:
-    epoch = F.lit(_EPOCH).cast("date")
-    aggs: list[Column] = []
+) -> list[str]:
+    aggs: list[str] = []
     for c in cols:
-        d = F.col(c).cast("date")
-        days = F.datediff(d, epoch).cast("double")
-        aggs += [
-            F.min(d).alias(f"{c}__min"),
-            F.max(d).alias(f"{c}__max"),
-        ]
+        d = f"CAST({sql_ident(c)} AS DATE)"
+        aggs += [f"min({d}) AS {sql_ident(c + '__min')}", f"max({d}) AS {sql_ident(c + '__max')}"]
         if include_median:
+            days = _DAYS.format(d)
             if exact_median:
-                med = F.percentile(days, F.lit(0.5))
+                med = f"percentile({days}, 0.5D)"
             else:
                 # sketch mode's bounded-state promise must hold for
                 # dates too, not just numerics — GK sketch, fixed state
-                med = F.percentile_approx(days, F.lit(0.5), F.lit(10000)).cast("double")
-            aggs.append(F.floor(med).cast("int").alias(f"{c}__meddays"))
+                med = f"CAST(percentile_approx({days}, 0.5D, 10000) AS DOUBLE)"
+            aggs.append(f"CAST(floor({med}) AS INT) AS {sql_ident(c + '__meddays')}")
     return aggs
 
 
 def _date_from_wide(wide: DataFrame, cols: Sequence[str]) -> DataFrame:
-    epoch = F.lit(_EPOCH).cast("date")
-    pairs = ", ".join(f"'{_stack_label(c)}', `{c}__min`, `{c}__max`, `{c}__meddays`" for c in cols)
-    stack = f"stack({len(cols)}, {pairs}) as (varname, min_date, max_date, __meddays)"
-    return wide.select("time_period", F.expr(stack)).withColumn(
-        "median_date", F.date_add(epoch, F.col("__meddays"))
-    ).drop("__meddays")
+    return _stack_wide(
+        wide, cols, ("__min", "__max", "__meddays"), ("min_date", "max_date", "__meddays")
+    ).selectExpr(
+        "time_period", "varname", "min_date", "max_date",
+        f"date_add(DATE '{_EPOCH}', __meddays) AS median_date",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -391,17 +382,16 @@ def categorical_freq(df: DataFrame, time_col: str | Column, cols: Sequence[str],
     not raw rows. NULL is a first-class category (kept, counted).
     """
     t = F.col(time_col) if isinstance(time_col, str) else time_col
-    long = melt_long(
-        df.select(t.alias("time_period"), *[F.col(c).cast("string") for c in cols]),
-        ["time_period"], list(cols), value_type="string",
-    )
-    freq = long.groupBy("time_period", "varname", "value").agg(F.count(F.lit(1)).alias("count"))
+    long = melt_long(df.withColumn("time_period", t), ["time_period"], list(cols),
+                     value_type="string")
+    freq = long.groupBy("time_period", "varname", "value").agg(F.expr("count(1) AS `count`"))
     if not with_proportion:
         # top_k_with_other recomputes proportions after its rollup —
         # callers feeding it skip this window pass entirely
         return freq
-    w = Window.partitionBy("time_period", "varname")
-    return freq.withColumn("proportion", F.col("count") / F.sum("count").over(w))
+    return freq.selectExpr(
+        "*", "`count` / sum(`count`) OVER (PARTITION BY time_period, varname) AS proportion"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -420,24 +410,24 @@ def top_k_with_other(
     ``'Other values'`` and re-aggregate; proportions are computed *after*
     the rollup (:1062-1063, SURVEY §2.10.4).
 
-    The rank window partitions by (time, varname) — the same key the
-    frequency shuffle already clustered by, so no extra exchange.
+    The rank window shuffles by (time, varname); the rollup and the
+    proportion window reuse that partitioning, so the chain adds one
+    exchange.
     """
-    gc = list(group_cols)
+    gc = ", ".join(map(sql_ident, group_cols))
     # dense rank on count ONLY — ties share a rank and are all kept,
-    # matching frankv(-count, ties.method='dense') (:1054).
-    w = Window.partitionBy(*gc).orderBy(F.desc("count"))
-    ranked = freq.withColumn(
-        "rank",
-        F.when(F.col("value").isNull(), F.lit(0)).otherwise(F.dense_rank().over(w)),
+    # matching frankv(-count, ties.method='dense') (:1054); NULL keeps
+    # its own value whatever its rank
+    rank = f"dense_rank() OVER (PARTITION BY {gc} ORDER BY `count` DESC)"
+    other = sql_string(other_label)
+    relabelled = freq.selectExpr(
+        *map(sql_ident, group_cols), "`count`",
+        f"CASE WHEN value IS NULL OR {rank} <= {int(k)} THEN value ELSE {other} END AS value",
     )
-    relabelled = ranked.withColumn(
-        "value",
-        F.when(F.col("rank") <= k, F.col("value")).otherwise(F.lit(other_label)),
+    rolled = relabelled.groupBy(*group_cols, "value").agg(F.expr("sum(`count`) AS `count`"))
+    return rolled.selectExpr(
+        "*", f"`count` / sum(`count`) OVER (PARTITION BY {gc}) AS proportion"
     )
-    rolled = relabelled.groupBy(*gc, "value").agg(F.sum("count").alias("count"))
-    wp = Window.partitionBy(*gc)
-    return rolled.withColumn("proportion", F.col("count") / F.sum("count").over(wp))
 
 
 # ---------------------------------------------------------------------------
@@ -474,18 +464,15 @@ class CombinedProfile:
         persisted (it is periods x varnames rows), so numeric_stats and
         date_stats share it instead of each re-scanning the base."""
         if self._med is None:
-            epoch = F.lit(_EPOCH).cast("date")
-            proj = self.base.select(
+            proj = self.base.selectExpr(
                 "__time",
-                *[F.col(c).cast("double").alias(c) for c in self.num_cols],
-                *[
-                    F.datediff(F.col(c).cast("date"), epoch).cast("double").alias(c)
-                    for c in self.date_cols
-                ],
+                *[f"CAST({sql_ident(c)} AS DOUBLE) AS {sql_ident(c)}" for c in self.num_cols],
+                *[f"{_DAYS.format(f'CAST({sql_ident(c)} AS DATE)')} AS {sql_ident(c)}"
+                  for c in self.date_cols],
             )
-            self._med = exact_median_histogram(
+            self._med = tracked_persist(exact_median_histogram(
                 proj, "__time", self.num_cols + self.date_cols
-            ).persist()
+            ), scope="qa")
         return self._med
 
     def _join_medians(self, partial: DataFrame, med: DataFrame) -> DataFrame:
@@ -503,9 +490,7 @@ class CombinedProfile:
         cols = list(cols or self.num_cols)
         if self.median_mode != "histogram":
             return _numeric_from_wide(self.wide, cols)
-        pairs = ", ".join(f"'{_stack_label(c)}', `{c}__mean`, `{c}__min`, `{c}__max`" for c in cols)
-        stack = f"stack({len(cols)}, {pairs}) as (varname, mean, min, max)"
-        partial = self.wide.select("time_period", F.expr(stack))
+        partial = _stack_wide(self.wide, cols, ("__mean", "__min", "__max"), ("mean", "min", "max"))
         return self._join_medians(partial, self._medians()).select(
             "time_period", "varname", "mean", "median", "min", "max"
         )
@@ -514,48 +499,54 @@ class CombinedProfile:
         cols = list(cols or self.date_cols)
         if self.median_mode != "histogram":
             return _date_from_wide(self.wide, cols)
-        pairs = ", ".join(f"'{_stack_label(c)}', `{c}__min`, `{c}__max`" for c in cols)
-        stack = f"stack({len(cols)}, {pairs}) as (varname, min_date, max_date)"
-        partial = self.wide.select("time_period", F.expr(stack))
-        epoch = F.lit(_EPOCH).cast("date")
-        med = self._medians().select(
+        partial = _stack_wide(self.wide, cols, ("__min", "__max"), ("min_date", "max_date"))
+        med = self._medians().selectExpr(
             "time_period", "varname",
-            F.date_add(epoch, F.floor("median").cast("int")).alias("median_date"),
+            f"date_add(DATE '{_EPOCH}', CAST(floor(median) AS INT)) AS median_date",
         )
         return self._join_medians(partial, med)
 
-    def gate_estimates(self) -> dict[str, int]:
-        """Union the per-time-period HLL sketches -> one global distinct
-        estimate per gate column, without touching the base table again."""
-        if not self.gate_cols:
-            return {}
-        row = self.wide.agg(
-            *[
-                F.hll_sketch_estimate(
-                    F.hll_union_agg(F.col(f"{c}__hll"))
-                ).alias(c)
-                for c in self.gate_cols
-            ],
-            *[
-                F.max((F.col(f"{c}__nnull") > 0).cast("int")).alias(f"{c}__anynull")
-                for c in self.gate_cols
-            ],
-        ).first()
+    def gate_estimates(self) -> tuple[dict[str, float], str]:
+        """ONE eager query over the persisted aggregate (it materializes
+        the cache) returning:
+
+        - a global distinct estimate per gate column, from the union of
+          the per-period HLL sketches — no second base-table pass;
+        - every time period, as SQL text of a typed array literal, for
+          dense grid completion downstream. Periods are collected inside
+          a struct so a NULL period is kept (``collect_list`` skips NULL
+          elements, not structs holding one), and round-trip as strings
+          through a cast back to the period type.
+        """
+        aggs = [
+            *[f"hll_sketch_estimate(hll_union_agg({sql_ident(c + '__hll')})) AS {sql_ident(c)}"
+              for c in self.gate_cols],
+            *[f"max(CAST({sql_ident(c + '__nnull')} > 0 AS INT)) AS {sql_ident(c + '__anynull')}"
+              for c in self.gate_cols],
+            "transform(collect_list(struct(time_period)), "
+            "p -> CAST(p.time_period AS STRING)) AS __periods",
+        ]
+        row = self.wide.agg(*[F.expr(a) for a in aggs]).first()
         # two fixes folded in: (a) an all-NULL column (or an empty
         # time range) yields a NULL sketch -> estimate 0, not None;
         # (b) the exact recount counts NULL as a distinct value
         # (uniqueN semantics) while HLL ignores NULLs, so add the
         # null slot back to keep the two gate phases on one scale
-        return {
+        est = {
             c: (row[c] if row[c] is not None else 0.0)
                + (row[f"{c}__anynull"] or 0)
             for c in self.gate_cols
         }
+        dtype = self.wide.schema["time_period"].dataType.simpleString()
+        items = ", ".join(
+            "NULL" if p is None else sql_string(p) for p in row["__periods"]
+        )
+        return est, f"CAST(array({items}) AS ARRAY<{dtype}>)"
 
     def unpersist(self) -> None:
-        self.wide.unpersist()
+        tracked_release(self.wide)
         if self._med is not None:
-            self._med.unpersist()
+            tracked_release(self._med)
 
 
 def combined_profile(
@@ -593,16 +584,21 @@ def combined_profile(
         raise ValueError(f"unknown median_mode {mode!r}")
     t = F.col(time_col) if isinstance(time_col, str) else time_col
     gate = list(gate_cols if gate_cols is not None else classes.numeric + classes.datetime)
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__total")]
-    aggs += _miss_aggs(classes.profiled, _float_cols(df, classes.profiled))
     with_median = mode != "histogram"
-    aggs += _numeric_aggs(classes.numeric, mode == "buffer", include_median=with_median)
-    aggs += _date_aggs(classes.datetime, include_median=with_median,
-                       exact_median=(mode == "buffer"))
-    aggs += [
-        F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}__hll") for c in gate
+    aggs = [
+        "count(1) AS __total",
+        *_miss_aggs(classes.profiled, _float_cols(df, classes.profiled)),
+        *_numeric_aggs(classes.numeric, mode == "buffer", include_median=with_median),
+        *_date_aggs(classes.datetime, include_median=with_median,
+                    exact_median=(mode == "buffer")),
+        *[f"hll_sketch_agg(CAST({sql_ident(c)} AS STRING)) AS {sql_ident(c + '__hll')}"
+          for c in gate],
     ]
-    wide = df.groupBy(t.alias("time_period")).agg(*aggs).persist()
+    # one partition: every consumer of the aggregate (the gate query,
+    # the lag windows over varname, the ordered missingness output) then
+    # runs on it without another exchange. Tracked under scope "qa", so
+    # release_scope frees it even when a caller never calls unpersist().
+    wide = tracked_persist(_aggregate(df, t, aggs).repartition(1), scope="qa")
     base = None
     if mode == "histogram":
         base = df.select(
@@ -644,8 +640,6 @@ def distribution_drift(
     itself and never scanned twice. ``chi2_term`` is NULL for bins the
     baseline never populates (possible under heavy quantile ties).
     """
-    from apde_etl_spark.operators.cache import tracked_persist
-
     gcols = list(group_cols)
     probs = [i / n_bins for i in range(1, n_bins)]
     base = df.filter(baseline_pred)

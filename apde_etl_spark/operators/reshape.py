@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apde_etl_spark.functions.core import sql_ident, sql_string
+
 
 def melt_long(
     df: DataFrame,
@@ -41,13 +43,12 @@ def melt_long(
     """
     if not value_cols:
         raise ValueError("melt_long: value_cols is empty — stack(0) is invalid SQL")
-    from apde_etl_spark.operators.profile import _stack_label
-
     pairs = ", ".join(
-        f"'{_stack_label(c)}', cast(`{c}` as {value_type})" for c in value_cols
+        f"{sql_string(c)}, cast({sql_ident(c)} as {value_type})" for c in value_cols
     )
-    stack_expr = f"stack({len(value_cols)}, {pairs}) as (`{var_name}`, `{value_name}`)"
-    return df.select(*[F.col(c) for c in id_cols], F.expr(stack_expr))
+    stack_expr = (f"stack({len(value_cols)}, {pairs}) "
+                  f"as ({sql_ident(var_name)}, {sql_ident(value_name)})")
+    return df.selectExpr(*map(sql_ident, id_cols), stack_expr)
 
 
 def template_complete(

@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators import profile as P
-from apde_etl_spark.operators.finalize import complete_grid
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}

@@ -12,15 +12,24 @@ identity role (tests/manual/test-etl_qa_run_pipeline.R:138-141).
 
 Physical notes
 --------------
-- The raw table is scanned ONCE per column family (numeric+date+missing
-  share a single groupBy pass each; categorical needs its own melt), vs
-  the reference's 3-4 full base scans (:1186,1238,1343,1444).
+- The base table is scanned TWICE, column-pruned, at every size: one
+  fused groupBy(time) pass computes missingness, numeric and date stats
+  and the distinct-gate sketches for every column; the categorical melt
+  is the second (its grouping key includes the value). The reference
+  scans 3-4 times (:1186,1238,1343,1444). Caching the projected base to
+  share one scan was measured slower than two pruned scans at sf0.02,
+  sf0.1 and sf1, so nothing of the base table is cached.
 - The time-range filter and column projection are applied before any
   aggregation, so Catalyst pushes them into the parquet scan (predicate
   pushdown + column pruning; verify with .explain -> PushedFilters).
 - Numeric/date columns under ``distinct_threshold`` distinct values are
   demoted to categorical (:1252-1263) — an explicit cheap-gate-then-stats
-  two-phase plan, same as the reference.
+  two-phase plan, same as the reference. The gate is the one eager query
+  of the plan; it also returns the period list that completes the
+  categorical grid.
+- The only cache is the fused aggregate (one row per period, in one
+  partition, so the finalize windows and the ordered missingness output
+  read it without another exchange); :meth:`QaResults.release` frees it.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apde_etl_spark.functions.core import sql_ident
 from apde_etl_spark.operators import finalize as FIN
 from apde_etl_spark.operators import profile as P
 
@@ -100,10 +110,11 @@ class QaResults:
     _profile: object = field(default=None, repr=False)
 
     def release(self) -> None:
-        """Unpersist the fused-profile cache backing the result frames.
-        Call after the results are consumed (collected/written): a
-        long-running driver profiling many tables would otherwise
-        accumulate one persisted aggregate per call."""
+        """Unpersist the fused-profile cache backing the result frames —
+        the only cache the pipeline holds. Call after the results are
+        consumed (collected/written): a long-running driver profiling
+        many tables would otherwise accumulate one persisted aggregate
+        per call."""
         if self._profile is not None:
             self._profile.unpersist()
 
@@ -117,31 +128,10 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
 
     cols = config.cols or [c for c in df.columns if c != config.time_var]
     # P1/P2 — project + range-filter FIRST so the scan is pruned/pushed.
-    base = df.select(t.alias("__time"), *[F.col(c) for c in cols])
+    base = df.withColumn("__time", t).selectExpr("__time", *map(sql_ident, cols))
     if config.time_range is not None:
         lo, hi = config.time_range
         base = base.filter(F.col("__time").between(lo, hi))
-
-    # Share ONE base-table materialization between the fused profile
-    # pass and the categorical melt (scans 2 -> 1) when the projected
-    # input is cache-sized: below the byte gate the projected/filtered
-    # base persists (scope "qa", released by release_scope like every
-    # other operator cache; the profile pass materializes it, the melt
-    # reads it back as an InMemoryTableScan). Past the gate the plan
-    # is UNCHANGED — two column-pruned scans is the 100 TB shape;
-    # caching a 100 TB base table is not.
-    import os
-
-    from apde_etl_spark.operators.cache import tracked_persist
-    from apde_etl_spark.operators.similarity import plan_size_bytes
-
-    try:
-        cache_gate = int(os.environ.get(
-            "SPARK_GRAFT_QA_CACHE_BYTES", str(256 * 1024 * 1024)))
-    except ValueError:
-        cache_gate = 256 * 1024 * 1024
-    if cache_gate > 0 and plan_size_bytes(base) <= cache_gate:
-        base = tracked_persist(base, scope="qa")
 
     classes = P.classify_columns(base, cols)
     if not classes.profiled:
@@ -155,12 +145,9 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
     # sketch for every gate column, in a single groupBy(__time) whose
     # output (one row per period) is persisted. The A6 gate decision is
     # then read off the persisted aggregate (union the period sketches)
-    # instead of paying its own base scan — so the whole pipeline touches
-    # the base table exactly twice (this pass + the categorical melt),
-    # vs the reference's 3-4 FULL scans
-    # (R/etl_qa_run_pipeline.R:1186,1238,1343,1444). Stats computed for
-    # columns the gate later demotes are discarded — wasted aggregate
-    # buffers, but strictly cheaper than the extra scan they replace.
+    # instead of paying its own base scan. Stats computed for columns the
+    # gate later demotes are discarded — wasted aggregate buffers, but
+    # strictly cheaper than the extra scan they replace.
     gate_cols = classes.numeric + classes.datetime
     prof = P.combined_profile(
         base, "__time", classes, gate_cols=gate_cols,
@@ -171,7 +158,7 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
     # ~2-5%, so estimates outside a 0.7x-1.5x band of the threshold are
     # certain; only truly borderline columns pay for an exact recount
     # (usually: none), over a melt bounded by their tiny distinct sets.
-    est = prof.gate_estimates()
+    est, periods = prof.gate_estimates()
     thr = config.distinct_threshold
     demoted = {c for c in gate_cols if est[c] < 0.7 * thr}
     maybe = [c for c in gate_cols if 0.7 * thr <= est[c] < 1.5 * thr]
@@ -202,7 +189,9 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
         # frequency pass skips its own proportion window
         freq = P.categorical_freq(base, "__time", cat_cols, with_proportion=False)
         top = P.top_k_with_other(freq, config.top_k)
-        categorical = FIN.finalize_categorical(top, config.abs_threshold, config.digits_prop)
+        categorical = FIN.finalize_categorical(
+            top, periods, config.abs_threshold, config.digits_prop
+        )
 
     values = FIN.stack_values(categorical, continuous, date)
 

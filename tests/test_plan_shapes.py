@@ -697,3 +697,33 @@ def test_video_decode_joins_plan_as_broadcast(spark, sf_dir, qs):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan  # the real decode seam, build side
+
+
+#: Spark jobs of one run_qa_pipeline(lineitem, _qa_lineitem_cfg()) call at
+#: sf0.01: the eager gate query plus collecting values and missingness
+QA_PIPELINE_JOBS = 9
+
+
+def test_qa_pipeline_job_count(spark, sf_dir):
+    """Fixed per-call cost guard: the fused profile, gate, categorical
+    chain and finalize arms launch exactly QA_PIPELINE_JOBS jobs in total
+    (construction and both collects). More means an exchange, a cache
+    build or an eager action crept back in."""
+    import os
+
+    from apde_etl_spark.plans.catalog import _qa_lineitem_cfg
+    from apde_etl_spark.plans.qa_pipeline import run_qa_pipeline
+
+    sc = spark.sparkContext
+    li = spark.read.parquet(
+        os.path.join(os.path.dirname(sf_dir), "sf0.01", "lineitem.parquet"))
+    li.schema  # resolve the reader before counting
+    group = "test_qa_pipeline_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_qa_pipeline(li, _qa_lineitem_cfg())
+        assert res.values.collect() and res.missingness.collect()
+        res.release()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == QA_PIPELINE_JOBS

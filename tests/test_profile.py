@@ -352,3 +352,152 @@ def test_hll_estimate_accuracy_and_null_handling(spark):
     est2 = hll_estimate(hll_registers(withnull, "id")).first()[
         "est_distinct"]
     assert abs(est2 - 2500) / 2500 < 0.15
+
+
+# ---------------------------------------------------------------------------
+# Cache hygiene and dense grid completion of run_qa_pipeline
+# ---------------------------------------------------------------------------
+
+
+def test_qa_pipeline_release_frees_every_cache(spark):
+    """Grid completion used to persist an untracked frame per call that
+    release() never freed; two calls on different inputs must leave the
+    persistent-RDD count where it started."""
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    for shift in (0, 1):
+        df = spark.range(300).selectExpr(
+            f"CAST(id % 4 + {shift} AS INT) AS yr",
+            f"CAST(id % 13 + {shift} AS DOUBLE) AS x",
+            "CAST(id % 5 AS STRING) AS s",
+        )
+        res = run_qa_pipeline(df, QaConfig(time_var="yr"))
+        assert res.values.collect() and res.missingness.collect()
+        res.release()
+    assert jsc.getPersistentRDDs().size() == start
+
+
+_EDGE_SCHEMA = "yr int, cat string, code string, x double"
+
+
+def _edge_rows():
+    """'b' is absent from 2020 and from the NULL period, the NULL
+    category from 2020 and 2021; x has 3 distinct values (demoted)."""
+    spec = [(2019, "a", 5), (2019, "b", 3), (2019, None, 1), (2020, "a", 4),
+            (2021, "a", 2), (2021, "b", 6), (None, "a", 3), (None, None, 2)]
+    rows, i = [], 0
+    for yr, cat, n in spec:
+        for _ in range(n):
+            rows.append((yr, cat, f"c{i % 2}", float(i % 3)))
+            i += 1
+    return rows
+
+
+def _duck_qa(rows, cols, where, abs_threshold=3.0, k=8):
+    """DuckDB restatement of the categorical ``values`` rows and the
+    ``missingness`` table: NULL-safe dense grid, lag ordered NULLS FIRST
+    (an ascending Spark window's order)."""
+    import duckdb
+
+    from apde_etl_spark.plans.catalog import _sql_round
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (yr INTEGER, cat VARCHAR, code VARCHAR, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+
+    def flag(cur, prev):
+        mag = f"abs(({cur} - {prev}) * 100)"
+        return (f"CASE WHEN {mag} > {abs_threshold} "
+                f"THEN CAST({_sql_round(mag, 1)} AS VARCHAR) || '%' END")
+
+    base = f"base AS (SELECT yr AS tp, cat, code, x FROM t {where})"
+    freq = " UNION ALL ".join(
+        f"SELECT tp, '{c}' AS varname, CAST({c} AS VARCHAR) AS value, COUNT(*) AS n "
+        f"FROM base GROUP BY tp, {c}" for c in cols)
+    values = con.execute(f"""
+    WITH {base}, freq AS ({freq}),
+    ranked AS (SELECT *, CASE WHEN value IS NULL THEN 0 ELSE dense_rank() OVER
+                 (PARTITION BY tp, varname ORDER BY n DESC) END AS rnk FROM freq),
+    rolled AS (SELECT tp, varname, CASE WHEN rnk <= {k} THEN value
+                 ELSE 'Other values' END AS value, SUM(n) AS n FROM ranked GROUP BY ALL),
+    prop AS (SELECT *, n / SUM(n) OVER (PARTITION BY tp, varname) AS p FROM rolled),
+    dense AS (
+      SELECT g.tp, v.varname, v.value, COALESCE(p.n, 0) AS n, COALESCE(p.p, 0.0) AS p
+      FROM (SELECT DISTINCT tp FROM base) g
+      CROSS JOIN (SELECT DISTINCT varname, value FROM prop) v
+      LEFT JOIN prop p ON g.tp IS NOT DISTINCT FROM p.tp AND v.varname = p.varname
+                      AND v.value IS NOT DISTINCT FROM p.value),
+    lagged AS (SELECT *, lag(p) OVER (PARTITION BY varname, value
+                 ORDER BY tp ASC NULLS FIRST) AS prev FROM dense)
+    SELECT tp, varname, value, CAST(n AS BIGINT), {_sql_round('p', 3)}, {flag('p', 'prev')}
+    FROM lagged""").fetchall()
+    miss = " UNION ALL ".join(
+        f"SELECT tp, '{c}' AS varname, COUNT(*) FILTER (WHERE {c} IS NULL) AS nrow, "
+        f"COUNT(*) FILTER (WHERE {c} IS NULL) / COUNT(*) AS p FROM base GROUP BY tp"
+        for c in cols)
+    missing = con.execute(f"""
+    WITH {base}, miss AS ({miss}),
+    lagged AS (SELECT *, lag(p) OVER (PARTITION BY varname ORDER BY tp ASC NULLS FIRST)
+                 AS prev FROM miss)
+    SELECT tp, varname, CAST(nrow AS BIGINT), {_sql_round('p', 3)}, {flag('p', 'prev')}
+    FROM lagged""").fetchall()
+    return values, missing
+
+
+def _sorted(rows):
+    return sorted(map(tuple, rows), key=lambda r: [(v is not None, v) for v in r])
+
+
+@pytest.mark.parametrize("cols, time_range, where", [
+    (["cat", "code"], None, ""),                        # character columns only
+    (["cat", "code", "x"], None, ""),                   # x is a demoted gate column
+    (["cat", "code", "x"], (2020, 2021), "WHERE yr BETWEEN 2020 AND 2021"),
+])
+def test_categorical_grid_completion_matches_duckdb(spark, cols, time_range, where):
+    rows = _edge_rows()
+    df = spark.createDataFrame(rows, _EDGE_SCHEMA)
+    res = run_qa_pipeline(df, QaConfig(time_var="yr", cols=cols, time_range=time_range))
+    got_values = res.values.filter("vartype = 'Categorical'").select(
+        "time_period", "varname", "value", "count", "proportion",
+        "abs_proportion_change").collect()
+    got_missing = res.missingness.collect()
+    res.release()
+    want_values, want_missing = _duck_qa(rows, cols, where)
+    assert _sorted(got_values) == _sorted(want_values)
+    assert _sorted(got_missing) == _sorted(want_missing)
+    # absent (value, period) pairs are zero-filled, not dropped
+    b = {r["time_period"]: r["count"] for r in got_values
+         if r["varname"] == "cat" and r["value"] == "b"}
+    if time_range is None:
+        assert b == {None: 0, 2019: 3, 2020: 0, 2021: 6}
+    else:
+        assert b == {2020: 0, 2021: 6}
+
+
+def test_sql_twins_match_column_helpers(spark):
+    """The SQL-text formulas in functions.core must give bit-identical
+    results to their Column counterparts."""
+    from apde_etl_spark.functions.core import (
+        change_flag_abs,
+        change_flag_abs_sql,
+        change_flag_rel,
+        change_flag_rel_sql,
+        null_scrub,
+        null_scrub_sql,
+        round_half_away,
+        round_half_away_sql,
+    )
+
+    vals = [0.0, 0.0005, -0.0005, 1.2345, -2.5, 0.125, 12.25, 1e15 + 0.5,
+            float("nan"), float("inf"), None]
+    df = spark.createDataFrame(list(zip(vals, vals[1:] + [1.0])), "x double, y double")
+    by_col = df.select(
+        round_half_away(null_scrub("x"), 3), round_half_away(F.col("x"), 0),
+        change_flag_abs(F.col("x"), F.col("y"), 3.0),
+        change_flag_rel(F.col("x"), F.col("y"), 10.0),
+    ).collect()
+    by_sql = df.selectExpr(
+        round_half_away_sql(null_scrub_sql("x"), 3), round_half_away_sql("x", 0),
+        change_flag_abs_sql("x", "y", 3.0), change_flag_rel_sql("x", "y", 10.0),
+    ).collect()
+    assert [tuple(map(repr, r)) for r in by_col] == [tuple(map(repr, r)) for r in by_sql]
