@@ -522,34 +522,22 @@ def build_knn_graph(
 # op order via per-dimension accumulation, same (cos DESC, id ASC)
 # cuts, same distinct/union semantics; parity is test-pinned against
 # the iterative walk and the gate entries' oracle hashes). Past the
-# gate — or with SPARK_GRAFT_ANN_LOCAL_SERVE=0 — the iterative
-# join-per-hop plan below serves unchanged; that is the path a corpus
-# too large to replicate must take, and the two produce identical rows.
+# gate — or with ``local_max_rows=0`` — the iterative join-per-hop plan
+# below serves unchanged; that is the path a corpus too large to
+# replicate must take, and the two produce identical rows.
 
+#: corpus rows up to which the serve replicates the index (read at
+#: call time; ``ann_graph_search_layered(local_max_rows=...)`` overrides
+#: it per call)
+LOCAL_SERVE_MAX_ROWS = 200_000
 
-def _local_serve_rows_gate() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_ANN_BCAST_ROWS", "200000"))
-    except ValueError:
-        return 200000
-
-
-def _local_serve_budget_bytes() -> int:
-    """Byte budget for the replicated-index payload (round-10 verdict
-    #3): the row gate alone admits a ~1.6 GB broadcast at 200k rows x
-    1024 dims — guide §3.1's driver/executor-OOM failure mode under an
-    innocent-looking gate. The estimate is rows x (dim x 8 + slack)
-    for the vector matrix; the CSR adjacency is bounded by the build's
-    n_neighbors x rows int64s and rides inside the same slack."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_ANN_BCAST_BYTES",
-                                  str(256 * 1024 * 1024)))
-    except ValueError:
-        return 256 * 1024 * 1024
+#: byte budget for the replicated-index payload (round-10 verdict #3):
+#: the row gate alone admits a ~1.6 GB broadcast at 200k rows x 1024
+#: dims — guide §3.1's driver/executor-OOM failure mode under an
+#: innocent-looking gate. The estimate is rows x (dim x 8 + slack) for
+#: the vector matrix; the CSR adjacency is bounded by the build's
+#: n_neighbors x rows int64s and rides inside the same slack.
+LOCAL_SERVE_MAX_BYTES = 256 * 1024 * 1024
 
 
 #: superseded per-index broadcasts, unpersisted (executor blocks freed)
@@ -573,6 +561,7 @@ def _try_local_serve(
     id_col: str,
     vec_col: str,
     layered: bool,
+    max_rows: int,
 ) -> DataFrame | None:
     """Broadcast-index serve, or None when the gate/shape rules it out.
 
@@ -597,10 +586,7 @@ def _try_local_serve(
     import logging
     import os
 
-    if os.environ.get("SPARK_GRAFT_ANN_LOCAL_SERVE", "1") == "0":
-        return None
-    gate = _local_serve_rows_gate()
-    if gate <= 0:
+    if max_rows <= 0:
         return None
     from pyspark.sql.types import (
         DoubleType,
@@ -616,8 +602,8 @@ def _try_local_serve(
         # iterative path preserves the corpus id's original type — an
         # Integer/Short corpus must take the join path so the same call
         # returns the same schema regardless of corpus size or the
-        # SPARK_GRAFT_ANN_LOCAL_SERVE toggle (the PageRank fast path
-        # declines non-long ids for the same reason).
+        # row gate (the PageRank fast path declines non-long ids for
+        # the same reason).
         id_type = corpus_df.schema[id_col].dataType
         if not isinstance(id_type, LongType):
             return None
@@ -629,21 +615,21 @@ def _try_local_serve(
         vec_arr = as_double_array(vec_col)
         p = (corpus_df
              .select(F.size(vec_arr).alias("__d"))
-             .limit(gate + 1)
+             .limit(max_rows + 1)
              .agg(F.count(F.lit(1)).alias("n"),
                   F.count("__d").alias("nd"),
                   F.min("__d").alias("dmin"),
                   F.max("__d").alias("dmax"))
              .collect()[0])
         n_rows = int(p["n"])
-        if n_rows > gate or n_rows == 0:
+        if n_rows > max_rows or n_rows == 0:
             return None
         if p["nd"] != n_rows or p["dmin"] is None or p["dmin"] != p["dmax"]:
             return None
         dim_c = int(p["dmax"])
         if dim_c <= 0:
             return None
-        if n_rows * (dim_c * 8 + 24) > _local_serve_budget_bytes():
+        if n_rows * (dim_c * 8 + 24) > LOCAL_SERVE_MAX_BYTES:
             return None
         # query-side shape probe (round-10 ADVICE, low): a null or
         # ragged query vector — or a query dim != corpus dim — would
@@ -901,64 +887,16 @@ def ann_graph_search(
     cost: per query per hop the frontier is <= beam * n_neighbors
     candidate rows, each costing one dot fold. The plan reads ONLY the
     graph/graph_meta parquet and the two input frames — no
-    construction scan (test-asserted).
+    construction scan (test-asserted). On a layered index the upper
+    layers are ignored: this is the layer-0 walk of
+    :func:`ann_graph_search_layered` with the descent skipped.
 
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_query_prebuilt`."""
-    fast = _try_local_serve(
-        spark, index_dir, queries_df, corpus_df, k=k, beam=beam,
-        hops=hops, descend_beam=0, hops_per_layer=0, id_col=id_col,
-        vec_col=vec_col, layered=False)
-    if fast is not None:
-        return fast
-    graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
-    meta = spark.read.parquet(f"{index_dir}/graph_meta")
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    corpus = corpus_df.select(
-        F.col(id_col).alias("__cid"), as_double_array(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(corpus, "__cid")
-            .join(q, "query_id")
-            .select(
-                "query_id", "__cid",
-                (dot(F.col("__cv"), F.col("__qv"))
-                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"),
-            )
-        )
-
-    # seed with every stored entry point (n_entries rows broadcast)
-    beam_df = q.select("query_id").crossJoin(
-        F.broadcast(meta.select(F.col("entry_id").alias("__cid"))))
-    for _ in range(hops):
-        expanded = beam_df.select("query_id", "__cid").unionAll(
-            beam_df.join(
-                graph, beam_df["__cid"] == graph["src"]
-            ).select("query_id", F.col("dst").alias("__cid"))
-        ).distinct()
-        scored = score(expanded).withColumn(
-            "__rk", F.row_number().over(wb))
-        beam_df = scored.filter(F.col("__rk") <= beam).select(
-            "query_id", "__cid", "__cos")
-        # bound lineage growth across hops (the PageRank/BFS discipline)
-        beam_df = beam_df.localCheckpoint(eager=False)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-    return (
-        beam_df.filter(F.col("__cid") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wf).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("__cid").alias(id_col),
-                F.col("__cos").alias("cosine_raw"))
-    )
+    return _graph_walk(
+        spark, index_dir, queries_df, corpus_df, k=k, beam=beam, hops=hops,
+        descend_beam=0, hops_per_layer=0, id_col=id_col, vec_col=vec_col,
+        layered=False, local_max_rows=None)
 
 
 def ann_graph_search_layered(
@@ -973,6 +911,7 @@ def ann_graph_search_layered(
     hops_per_layer: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    local_max_rows: int | None = None,
 ) -> DataFrame:
     """Serve queries from the LAYERED small-world index (HNSW-class;
     Malkov & Yashunin 2018, public method): a fixed-hop beam DESCENT
@@ -997,24 +936,50 @@ def ann_graph_search_layered(
     neighborhood in O(log n) hops, so the fixed layer-0 budget is
     spent refining, not traveling.
 
+    ``local_max_rows`` overrides :data:`LOCAL_SERVE_MAX_ROWS` for this
+    call (``0`` forces the iterative join-per-hop serve; ``None`` keeps
+    the module gate). Both paths return identical rows.
+
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_graph_search`."""
+    return _graph_walk(
+        spark, index_dir, queries_df, corpus_df, k=k, beam=beam, hops=hops,
+        descend_beam=descend_beam, hops_per_layer=hops_per_layer,
+        id_col=id_col, vec_col=vec_col, layered=True,
+        local_max_rows=local_max_rows)
+
+
+def _graph_walk(
+    spark: SparkSession,
+    index_dir: str,
+    queries_df: DataFrame,
+    corpus_df: DataFrame,
+    k: int,
+    beam: int,
+    hops: int,
+    descend_beam: int,
+    hops_per_layer: int,
+    id_col: str,
+    vec_col: str,
+    layered: bool,
+    local_max_rows: int | None,
+) -> DataFrame:
+    """The shared serve walk: the layered descent when ``layered``
+    (reads layer_meta/graph_upper), then the layer-0 walk seeded by the
+    descent beam plus every stored entry point, then the top-``k``
+    re-rank. Below the row gate the broadcast-index serve runs the same
+    recurrence in one Arrow stage."""
     fast = _try_local_serve(
         spark, index_dir, queries_df, corpus_df, k=k, beam=beam,
         hops=hops, descend_beam=descend_beam,
         hops_per_layer=hops_per_layer, id_col=id_col, vec_col=vec_col,
-        layered=True)
+        layered=layered,
+        max_rows=(LOCAL_SERVE_MAX_ROWS if local_max_rows is None
+                  else local_max_rows))
     if fast is not None:
         return fast
     graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
     meta = spark.read.parquet(f"{index_dir}/graph_meta")
-    lmeta = spark.read.parquet(f"{index_dir}/layer_meta").first()
-    n_layers = int(lmeta["n_layers"])
-    layer_factor = int(lmeta["layer_factor"])
-    try:
-        upper = spark.read.parquet(f"{index_dir}/graph_upper")
-    except Exception:
-        upper = None  # every upper layer was < 2 nodes (tiny corpus)
 
     q = queries_df.select(
         F.col(id_col).alias("query_id"),
@@ -1045,93 +1010,86 @@ def ann_graph_search_layered(
             .select("query_id", "__cid", "__cos")
         )
 
-    # ---- descent: top-layer seeds, expand-score-cut per layer
-    lv = node_levels(corpus_df, id_col, n_layers, layer_factor)
-    # descend from layer_meta's n_layers whenever upper artifacts exist:
-    # seeds come from the LEVEL assignment (corpus nodes with lvl >=
-    # top), not from the edge table, so an edge-sparse top layer just
-    # no-ops its hop rounds. Identical to probing max(layer) PROVIDED
-    # the top layer's lvl>= set is populated (true at every gate/stress
-    # corpus here); on a hash-unlucky corpus whose top layer is empty
-    # the descent degrades to the layer below seeded through empty
-    # rounds plus the entry points — recall-safe but not result-
-    # identical to a max(layer) probe (round-9 ADVICE #1). The
-    # branch-free form is what the unrolled SQL oracles (and the
-    # insert-built index, whose top layer bootstraps gradually) restate
-    top = n_layers if upper is not None else 0
-    if top > 0:
-        seeds = lv.filter(F.col("lvl") >= top).select(
-            F.col(id_col).alias("__cid"))
-        beam_df = cut(score(
-            q.select("query_id").crossJoin(F.broadcast(seeds))),
-            descend_beam)
-        beam_df = beam_df.localCheckpoint(eager=False)
-        for l in range(top, 0, -1):
-            edges_l = upper.filter(F.col("layer") == l).select("src", "dst")
-            for _ in range(hops_per_layer):
-                expanded = beam_df.select("query_id", "__cid").unionAll(
-                    beam_df.join(
-                        edges_l, beam_df["__cid"] == edges_l["src"]
-                    ).select("query_id", F.col("dst").alias("__cid"))
-                ).distinct()
-                beam_df = cut(score(expanded), descend_beam)
-                # bound lineage growth across rounds (the flat walk's
-                # localCheckpoint discipline)
-                beam_df = beam_df.localCheckpoint(eager=False)
-        seed0 = beam_df.select("query_id", "__cid")
-    else:
-        seed0 = None
+    def walk(beam_df: DataFrame, edges: DataFrame, rounds: int,
+             width: int) -> DataFrame:
+        for _ in range(rounds):
+            expanded = beam_df.select("query_id", "__cid").unionAll(
+                beam_df.join(
+                    edges, beam_df["__cid"] == edges["src"]
+                ).select("query_id", F.col("dst").alias("__cid"))
+            ).distinct()
+            # bound lineage growth across rounds (the PageRank/BFS
+            # discipline)
+            beam_df = cut(score(expanded), width).localCheckpoint(
+                eager=False)
+        return beam_df
 
-    # ---- layer 0: the flat fixed-hop walk, seeded by descent + entries
-    ent = q.select("query_id").crossJoin(
+    # seed with every stored entry point (n_entries rows broadcast)
+    beam_df = q.select("query_id").crossJoin(
         F.broadcast(meta.select(F.col("entry_id").alias("__cid"))))
-    beam_ids = ent if seed0 is None else seed0.unionAll(ent)
-    beam_df = beam_ids
-    for _ in range(hops):
-        expanded = beam_df.select("query_id", "__cid").unionAll(
-            beam_df.join(
-                graph, beam_df["__cid"] == graph["src"]
-            ).select("query_id", F.col("dst").alias("__cid"))
-        ).distinct()
-        beam_df = cut(score(expanded), beam)
-        beam_df = beam_df.localCheckpoint(eager=False)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
+    if layered:
+        lmeta = spark.read.parquet(f"{index_dir}/layer_meta").first()
+        n_layers = int(lmeta["n_layers"])
+        layer_factor = int(lmeta["layer_factor"])
+        try:
+            upper = spark.read.parquet(f"{index_dir}/graph_upper")
+        except Exception:
+            upper = None  # every upper layer was < 2 nodes (tiny corpus)
+        # ---- descent: top-layer seeds, expand-score-cut per layer.
+        # Descend from layer_meta's n_layers whenever upper artifacts
+        # exist: seeds come from the LEVEL assignment (corpus nodes with
+        # lvl >= top), not from the edge table, so an edge-sparse top
+        # layer just no-ops its hop rounds. Identical to probing
+        # max(layer) PROVIDED the top layer's lvl>= set is populated
+        # (true at every gate/stress corpus here); on a hash-unlucky
+        # corpus whose top layer is empty the descent degrades to the
+        # layer below seeded through empty rounds plus the entry points
+        # — recall-safe but not result-identical to a max(layer) probe
+        # (round-9 ADVICE #1). The branch-free form is what the unrolled
+        # SQL oracles (and the insert-built index, whose top layer
+        # bootstraps gradually) restate
+        top = n_layers if upper is not None else 0
+        if top > 0:
+            lv = node_levels(corpus_df, id_col, n_layers, layer_factor)
+            seeds = lv.filter(F.col("lvl") >= top).select(
+                F.col(id_col).alias("__cid"))
+            down = cut(score(
+                q.select("query_id").crossJoin(F.broadcast(seeds))),
+                descend_beam).localCheckpoint(eager=False)
+            for l in range(top, 0, -1):
+                down = walk(
+                    down,
+                    upper.filter(F.col("layer") == l).select("src", "dst"),
+                    hops_per_layer, descend_beam)
+            # ---- layer 0 seeded by descent + entries
+            beam_df = down.select("query_id", "__cid").unionAll(beam_df)
+    beam_df = walk(beam_df, graph, hops, beam)
     return (
         beam_df.filter(F.col("__cid") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wf).cast("int"))
+        .withColumn("rank", F.row_number().over(wb).cast("int"))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", F.col("__cid").alias(id_col),
                 F.col("__cos").alias("cosine_raw"))
     )
 
 
-def _knn_edges_cos(sub: DataFrame, k: int,
-                   use_arrow: bool = False) -> DataFrame:
+def _knn_edges_cos(sub: DataFrame, k: int) -> DataFrame:
     """(src, dst, __cos) — exact cosine k-NN edges over a BOUNDED
     subset (the insertion build's bootstrap: <= boot_rows rows) as a
     plain self-join + window, cosine kept for downstream re-pruning.
     Distributed shape (no driver collect) because the caller bounds the
-    input, not this function. ``use_arrow`` routes the cosine through
-    the bit-identical Arrow scorer (boot_rows² pair rows — at the
-    stress tool's boot=1024 that is ~1M folds, minutes interpreted,
-    seconds batched)."""
+    input, not this function. The cosine runs through the bit-identical
+    Arrow scorer (boot_rows² pair rows — at the stress tool's boot=1024
+    that is ~1M folds, minutes interpreted, seconds batched)."""
     from apde_etl_spark.operators.similarity import arrow_pair_cosine
 
     a = sub.select(F.col("__id").alias("src"), F.col("__v").alias("__va"),
                    F.col("__n").alias("__na"))
     b = sub.select(F.col("__id").alias("dst"), F.col("__v").alias("__vb"),
                    F.col("__n").alias("__nb"))
-    pairs = a.join(b, F.col("src") != F.col("dst"))
-    if use_arrow:
-        scored = arrow_pair_cosine(
-            pairs, keys=("src", "dst"), a_col="__va", b_col="__vb",
-            na_col="__na", nb_col="__nb")
-    else:
-        scored = pairs.select(
-            "src", "dst",
-            (dot(F.col("__va"), F.col("__vb"))
-             / (F.col("__na") * F.col("__nb"))).alias("__cos"))
+    scored = arrow_pair_cosine(
+        a.join(b, F.col("src") != F.col("dst")), keys=("src", "dst"),
+        a_col="__va", b_col="__vb", na_col="__na", nb_col="__nb")
     w = Window.partitionBy("src").orderBy(F.desc("__cos"), F.asc("dst"))
     return (
         scored
@@ -1177,7 +1135,6 @@ def build_knn_graph_insert(
     refresh_passes: int = 1,
     refresh_hops: int = 3,
     refresh_beam: int = 16,
-    use_arrow: bool | None = None,
 ) -> dict:
     """Construct the layered small-world index BY INSERTION (the true
     HNSW build of Malkov & Yashunin 2018, public method): each batch of
@@ -1238,8 +1195,7 @@ def build_knn_graph_insert(
     exact-built graph at the 200k stress point and a 1M-vector build
     wall in BASELINE.md (tools/scale_stress_anngraph.py --mode insert).
 
-    ``use_arrow`` (default on; ``SPARK_GRAFT_ANN_ARROW=0`` disables)
-    routes every pair-cosine through
+    Every pair-cosine runs through
     :func:`similarity.arrow_pair_cosine` — BIT-IDENTICAL to the HOF
     fold (same IEEE operation order; the gate-entry hashes are the
     standing regression), ~2 orders faster on the million-row
@@ -1248,12 +1204,9 @@ def build_knn_graph_insert(
     verdict #1).
     """
     import gc as _gc
-    import os as _os
 
     from apde_etl_spark.operators.similarity import arrow_pair_cosine
 
-    if use_arrow is None:
-        use_arrow = _os.environ.get("SPARK_GRAFT_ANN_ARROW", "1") != "0"
     spark = df.sparkSession
 
     def _ckpt(frame: DataFrame) -> DataFrame:
@@ -1299,12 +1252,11 @@ def build_knn_graph_insert(
     n_nodes = nodes.count()
 
     boot = nodes.filter(F.col("__rn") < boot_rows)
-    adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors, use_arrow=use_arrow))
+    adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors))
     adjU = None
     for l in range(1, n_layers + 1):
         sub = boot.filter(F.col("lvl") >= l)
-        arm = _knn_edges_cos(sub, layer_neighbors,
-                             use_arrow=use_arrow).select(
+        arm = _knn_edges_cos(sub, layer_neighbors).select(
             F.lit(l).cast("int").alias("layer"), "src", "dst", "__cos")
         adjU = arm if adjU is None else adjU.unionByName(arm)
     adjU = _ckpt(adjU)
@@ -1331,16 +1283,9 @@ def build_knn_graph_insert(
             F.col("lvl").alias("__clvl"))
 
         def score(cand: DataFrame) -> DataFrame:
-            joined = (
+            return arrow_pair_cosine(
                 cand.join(corpus, "__cid")
-                .join(q.select("query_id", "__qv", "__qn"), "query_id")
-            )
-            if use_arrow:
-                return arrow_pair_cosine(joined)
-            return joined.select(
-                "query_id", "__cid",
-                (dot(F.col("__cv"), F.col("__qv"))
-                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"))
+                .join(q.select("query_id", "__qv", "__qn"), "query_id"))
 
         def cut(scored: DataFrame, width: int) -> DataFrame:
             return (
@@ -1497,15 +1442,8 @@ def build_knn_graph_insert(
                     .distinct()
                     .join(visited, ["query_id", "__cid"], "left_anti")
                 )
-                joined_r = new.join(corpus_all, "__cid").join(
-                    q_all, "query_id")
-                if use_arrow:
-                    scored = arrow_pair_cosine(joined_r)
-                else:
-                    scored = joined_r.select(
-                        "query_id", "__cid",
-                        (dot(F.col("__cv"), F.col("__qv"))
-                         / (F.col("__cn") * F.col("__qn"))).alias("__cos"))
+                scored = arrow_pair_cosine(
+                    new.join(corpus_all, "__cid").join(q_all, "query_id"))
                 beam = _ckpt(
                     beam.unionAll(scored)
                     .withColumn("__rk", F.row_number().over(wq))

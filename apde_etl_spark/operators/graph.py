@@ -65,13 +65,9 @@ def degree_table(edges: DataFrame, src: str = "src") -> DataFrame:
     )
 
 
-def _pagerank_local_edges_gate() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", "2000000"))
-    except ValueError:
-        return 2_000_000
+#: edge count up to which :func:`pagerank_integer` runs on the driver
+#: (read at call time; ``local_max_edges=`` overrides it per call)
+PAGERANK_LOCAL_MAX_EDGES = 2_000_000
 
 
 def _pagerank_local_try(
@@ -90,6 +86,7 @@ def _pagerank_local_try(
     n_seed: int,
     tp_seed: int,
     tol: int | None,
+    max_edges: int,
 ) -> DataFrame | None:
     """Driver-side twin of the superstep loop, or None past the gate /
     on any structural surprise (non-long node ids, null endpoints,
@@ -105,8 +102,7 @@ def _pagerank_local_try(
     collect, so arbitrary Column predicates keep engine semantics."""
     import logging
 
-    gate = _pagerank_local_edges_gate()
-    if gate <= 0:
+    if max_edges <= 0:
         return None
     from pyspark.sql.types import LongType
 
@@ -115,7 +111,7 @@ def _pagerank_local_try(
             return None
         if not isinstance(edges.schema[dst].dataType, LongType):
             return None
-        if edges.select(src).limit(gate + 1).count() > gate:
+        if edges.select(src).limit(max_edges + 1).count() > max_edges:
             return None
 
         import numpy as np
@@ -206,6 +202,7 @@ def pagerank_integer(
     dangling: str = "drop",
     checkpoint_every: int = 0,
     tol: int | None = None,
+    local_max_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over a directed edge list.
 
@@ -249,6 +246,11 @@ def pagerank_integer(
     ranks on the node id, not broadcast. Results are identical either
     way (integer arithmetic; the unit suite pins partitioning
     invariance).
+
+    ``local_max_edges`` is the driver fast-path gate for this call:
+    up to that many edges the whole recurrence runs in numpy on one
+    collect. ``None`` uses :data:`PAGERANK_LOCAL_MAX_EDGES`; ``0``
+    forces the distributed loop. Results are bit-identical either way.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -305,7 +307,7 @@ def pagerank_integer(
     # in the identical order-independent arithmetic — instead of ~2
     # shuffle stages + 2 broadcast builds PER ITERATION whose fixed
     # scheduling cost dominates at driver-scale graphs. Past the gate
-    # (or SPARK_GRAFT_PR_LOCAL_EDGES=0) the distributed loop below is
+    # (or with local_max_edges=0) the distributed loop below is
     # unchanged — that is the 100 TB path (co-partition edges and ranks
     # on the node id). Results are bit-identical (parity test-pinned in
     # tests/test_graph.py; every entry hash-gated).
@@ -314,6 +316,8 @@ def pagerank_integer(
         uniform_init=(seed_pred is None), dangling=dangling, iters=iters,
         scale=scale, damp_num=damp_num, damp_den=damp_den,
         n_nodes=n_nodes, n_seed=n_seed, tp_seed=tp_seed, tol=tol,
+        max_edges=(PAGERANK_LOCAL_MAX_EDGES if local_max_edges is None
+                   else local_max_edges),
     )
     if local is not None:
         return local

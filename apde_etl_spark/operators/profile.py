@@ -114,41 +114,6 @@ def distinct_counts(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def distinct_gate(df: DataFrame, cols: Sequence[str], threshold: int) -> set[str]:
-    """Columns with fewer than ``threshold`` distinct values (the demotion
-    set), computed scale-aware in two phases:
-
-    1. ``approx_count_distinct`` per column — single pass, no Expand, no
-       melt; HLL rsd is ~5%, so estimates outside a [0.7x, 1.5x)
-       band of the threshold are decided with certainty (>6 sigma).
-    2. exact :func:`distinct_counts` only over the survivors (the
-       low-cardinality columns the gate exists to find — cheap shuffle).
-
-    At 100 TB phase 1 reads each value once and shuffles nothing but
-    sketches; phase 2's melt covers only columns whose distinct sets are
-    tiny by construction.
-    """
-    if not cols:
-        return set()
-    row = df.agg(
-        *[F.approx_count_distinct(c).alias(c) for c in cols],
-        *[F.max(F.col(c).isNull().cast("int")).alias(f"__null_{c}") for c in cols],
-    ).first()
-    # approx_count_distinct ignores NULLs but the exact recount
-    # (uniqueN semantics) counts NULL as a value — add the null slot
-    # back so both phases measure on one scale
-    approx = {c: row[c] + (row[f"__null_{c}"] or 0) for c in cols}
-    # HLL rsd is 5%; a 30-50% margin on either side of the threshold is
-    # >6 sigma, so decisions outside the band are certain and only truly
-    # borderline columns pay for an exact recount (usually: none).
-    demoted = {c for c in cols if approx[c] < 0.7 * threshold}
-    maybe = [c for c in cols if 0.7 * threshold <= approx[c] < 1.5 * threshold]
-    if not maybe:
-        return demoted
-    exact = {r["varname"]: r["n_distinct"] for r in distinct_counts(df, maybe).collect()}
-    return demoted | {c for c, n in exact.items() if n < threshold}
-
-
 # ---------------------------------------------------------------------------
 # A1 — missingness profile (R :700-702; T-SQL :1184-1202)
 # ---------------------------------------------------------------------------
@@ -207,7 +172,6 @@ def numeric_stats(
     df: DataFrame,
     time_col: str | Column,
     cols: Sequence[str],
-    exact_median: bool = True,
 ) -> DataFrame:
     """Per (time_period, varname): mean, exact median, min, max (doubles).
 
@@ -221,30 +185,35 @@ def numeric_stats(
     stacked long driver-free. ``percentile`` is exact (sorts values per
     group within the agg buffer) — acceptable because the distinct-count
     gate already routed truly-continuous columns here; at extreme group
-    sizes swap for ``approx_percentile`` via the ``exact_median`` flag.
+    sizes use :func:`combined_profile`'s ``median_mode`` (``"sketch"`` or
+    ``"histogram"``).
     """
     t = F.col(time_col) if isinstance(time_col, str) else time_col
-    return _numeric_from_wide(_aggregate(df, t, _numeric_aggs(cols, exact_median)), cols)
+    return _numeric_from_wide(_aggregate(df, t, _numeric_aggs(cols)), cols)
 
 
-def _numeric_aggs(
-    cols: Sequence[str], exact_median: bool = True, include_median: bool = True
-) -> list[str]:
+def _median_sql(expr: str, median_mode: str) -> str:
+    """Median aggregate of ``expr``: exact ``percentile`` for
+    ``"buffer"``; for ``"sketch"`` — the 100 TB escape hatch — a
+    GK-sketch quantile, fixed-size state per (group x column) instead
+    of all values buffered in the aggregate; rank error <= 1/accuracy
+    of the group."""
+    if median_mode == "buffer":
+        return f"percentile({expr}, 0.5D)"
+    return f"CAST(percentile_approx({expr}, 0.5D, 10000) AS DOUBLE)"
+
+
+def _numeric_aggs(cols: Sequence[str], median_mode: str = "buffer") -> list[str]:
+    """Mean/median/min/max aggregates per column; ``"histogram"`` mode
+    leaves the median to the separate value-count pass."""
     aggs: list[str] = []
     for c in cols:
         # nanvl: NaN -> NULL so every aggregate ignores it (na.rm
         # semantics — one NaN must not turn the period mean into NaN)
         d = f"nanvl(CAST({sql_ident(c)} AS DOUBLE), CAST(NULL AS DOUBLE))"
         aggs.append(f"avg({d}) AS {sql_ident(c + '__mean')}")
-        if include_median:
-            if exact_median:
-                med = f"percentile({d}, 0.5D)"
-            else:
-                # the 100 TB escape hatch: GK-sketch quantile, fixed-size
-                # state per (group x column) instead of all values buffered
-                # in the aggregate; rank error <= 1/accuracy of the group
-                med = f"CAST(percentile_approx({d}, 0.5D, 10000) AS DOUBLE)"
-            aggs.append(f"{med} AS {sql_ident(c + '__median')}")
+        if median_mode != "histogram":
+            aggs.append(f"{_median_sql(d, median_mode)} AS {sql_ident(c + '__median')}")
         aggs += [f"min({d}) AS {sql_ident(c + '__min')}", f"max({d}) AS {sql_ident(c + '__max')}"]
     return aggs
 
@@ -336,23 +305,15 @@ def date_stats(df: DataFrame, time_col: str | Column, cols: Sequence[str]) -> Da
 _DAYS = "CAST(datediff({}, DATE '" + _EPOCH + "') AS DOUBLE)"
 
 
-def _date_aggs(
-    cols: Sequence[str],
-    include_median: bool = True,
-    exact_median: bool = True,
-) -> list[str]:
+def _date_aggs(cols: Sequence[str], median_mode: str = "buffer") -> list[str]:
     aggs: list[str] = []
     for c in cols:
         d = f"CAST({sql_ident(c)} AS DATE)"
         aggs += [f"min({d}) AS {sql_ident(c + '__min')}", f"max({d}) AS {sql_ident(c + '__max')}"]
-        if include_median:
-            days = _DAYS.format(d)
-            if exact_median:
-                med = f"percentile({days}, 0.5D)"
-            else:
-                # sketch mode's bounded-state promise must hold for
-                # dates too, not just numerics — GK sketch, fixed state
-                med = f"CAST(percentile_approx({days}, 0.5D, 10000) AS DOUBLE)"
+        if median_mode != "histogram":
+            # sketch mode's bounded-state promise must hold for dates
+            # too, not just numerics
+            med = _median_sql(_DAYS.format(d), median_mode)
             aggs.append(f"CAST(floor({med}) AS INT) AS {sql_ident(c + '__meddays')}")
     return aggs
 
@@ -554,8 +515,7 @@ def combined_profile(
     time_col: str | Column,
     classes: ColumnClasses,
     gate_cols: Sequence[str] | None = None,
-    exact_median: bool = True,
-    median_mode: str | None = None,
+    median_mode: str = "buffer",
 ) -> CombinedProfile:
     """One groupBy(time) pass over ``df`` computing, per column family:
     null counts (all profiled columns), numeric mean/median/min/max, date
@@ -564,7 +524,7 @@ def combined_profile(
     is type-independent). The aggregated frame has one row per time
     period — persisting it is O(periods x columns), never O(data).
 
-    Median strategies (``median_mode``, defaulting from ``exact_median``):
+    Median strategies (``median_mode``):
 
     - ``"buffer"`` — exact ``percentile`` inside the fused aggregate.
       One pass, but the aggregate buffers every group value AND drags
@@ -579,18 +539,15 @@ def combined_profile(
       scale path when periods hold billions of rows. Costs one extra
       base scan, pruned to (time, numeric+date columns).
     """
-    mode = median_mode or ("buffer" if exact_median else "sketch")
-    if mode not in ("buffer", "sketch", "histogram"):
-        raise ValueError(f"unknown median_mode {mode!r}")
+    if median_mode not in ("buffer", "sketch", "histogram"):
+        raise ValueError(f"unknown median_mode {median_mode!r}")
     t = F.col(time_col) if isinstance(time_col, str) else time_col
     gate = list(gate_cols if gate_cols is not None else classes.numeric + classes.datetime)
-    with_median = mode != "histogram"
     aggs = [
         "count(1) AS __total",
         *_miss_aggs(classes.profiled, _float_cols(df, classes.profiled)),
-        *_numeric_aggs(classes.numeric, mode == "buffer", include_median=with_median),
-        *_date_aggs(classes.datetime, include_median=with_median,
-                    exact_median=(mode == "buffer")),
+        *_numeric_aggs(classes.numeric, median_mode),
+        *_date_aggs(classes.datetime, median_mode),
         *[f"hll_sketch_agg(CAST({sql_ident(c)} AS STRING)) AS {sql_ident(c + '__hll')}"
           for c in gate],
     ]
@@ -600,7 +557,7 @@ def combined_profile(
     # release_scope frees it even when a caller never calls unpersist().
     wide = tracked_persist(_aggregate(df, t, aggs).repartition(1), scope="qa")
     base = None
-    if mode == "histogram":
+    if median_mode == "histogram":
         base = df.select(
             t.alias("__time"), *dict.fromkeys(classes.numeric + classes.datetime)
         )
@@ -610,7 +567,7 @@ def combined_profile(
         num_cols=classes.numeric,
         date_cols=classes.datetime,
         gate_cols=gate,
-        median_mode=mode,
+        median_mode=median_mode,
         base=base,
     )
 

@@ -787,15 +787,10 @@ def _pair_cosine_scored(cand: DataFrame, out_col: str,
       (guide §4.2) — the seam the insertion build proved bit-identical
       and ~two orders cheaper per pair at millions of rows.
 
-    ``SPARK_GRAFT_ANN_ARROW=0`` forces the JVM fold everywhere (the
-    insertion build honors the same flag). Results are bit-identical on
-    every path (the Arrow scorer preserves the fold's IEEE-754 op
-    order; parity pinned in tests/test_similarity_arrow_seam.py)."""
-    import os
-
-    use_arrow = (strategy == "shuffle"
-                 and os.environ.get("SPARK_GRAFT_ANN_ARROW", "1") != "0")
-    if use_arrow:
+    Results are bit-identical on both paths (the Arrow scorer preserves
+    the fold's IEEE-754 op order; parity pinned in
+    tests/test_similarity_arrow_seam.py)."""
+    if strategy == "shuffle":
         return arrow_pair_cosine(
             cand, keys=("id_a", "id_b"), a_col="__va", b_col="__vb",
             na_col="__na", nb_col="__nb", out_col=out_col)

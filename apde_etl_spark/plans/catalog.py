@@ -65,10 +65,6 @@ def ensure_min_parallelism(df: DataFrame, path: str | None = None) -> DataFrame:
     RDD conversion round-trip per query (~1s of pure overhead, measured).
     Column pruning pushes through the repartition, so only the columns
     the query reads are shuffled."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_REBALANCE"):
-        return df
     if path is not None:
         try:
             if _source_bytes(path, _REBALANCE_MAX_BYTES) > _REBALANCE_MAX_BYTES:
@@ -1141,7 +1137,7 @@ FROM datestats
 """
 
 
-def _qa_lineitem_cfg(median_mode: str | None = None):
+def _qa_lineitem_cfg(median_mode: str = "buffer"):
     """ONE config for the full-values entries: qa_values_full and
     qa_values_histogram_mode must profile the IDENTICAL pipeline (their
     shared oracle is the same-result proof), so the config lives here."""

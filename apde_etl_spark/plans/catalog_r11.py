@@ -1,6 +1,5 @@
-"""Round 11 — gate-forced DISTRIBUTED twins of the size-gated fast
-paths (round-10 verdict #5: "un-blind the bench to the distributed
-fallbacks").
+"""Round 11 — DISTRIBUTED twins of the size-gated fast paths (round-10
+verdict #5: "un-blind the bench to the distributed fallbacks").
 
 The round-10 local fast paths (broadcast-index ANN serve, driver
 integer PageRank) are bit-identical to the distributed plans and
@@ -9,8 +8,11 @@ entries, the bench no longer executes ANY distributed work for those
 queries, so a regression in the iterative serve / superstep loop would
 be invisible until a corpus outgrows the gate. These twins compute the
 IDENTICAL result (same oracle SQL — the driver's correctness gate
-re-proves it every round) with the gates FORCED CLOSED, so the
-``--full`` bench carries a standing timing for the distributed shapes.
+re-proves it every round) with the gate passed as ``0`` to the entry's
+body, so the ``--full`` bench carries a standing timing for the
+distributed shapes. The override is an argument of that one call:
+nothing process-wide changes, so a concurrent default call keeps its
+fast path.
 
 Additions only: the headline list and every existing entry are
 untouched.
@@ -18,51 +20,29 @@ untouched.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from apde_etl_spark.plans.catalog import register
 from apde_etl_spark.plans.catalog_r6 import (
+    _graph_pagerank_directed_sinks,
     _pagerank_directed_sql,
-    graph_pagerank_directed_sinks,
 )
-from apde_etl_spark.plans.catalog_r8 import _HNSW_TOPK_SQL, ann_hnsw_topk
-
-
-def _with_env_forced(fn, spark, sf_dir, env: dict[str, str]) -> DataFrame:
-    """Run an entry constructor with gate env vars pinned, restoring the
-    previous values afterwards. The gates are read at CONSTRUCT time
-    (the fast paths decide while the DataFrame is being assembled), so
-    scoping the override to the constructor call is exact."""
-    saved = {k: os.environ.get(k) for k in env}
-    os.environ.update(env)
-    try:
-        return fn(spark, sf_dir)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+from apde_etl_spark.plans.catalog_r8 import _HNSW_TOPK_SQL, _ann_hnsw_topk
 
 
 @register("ann_hnsw_topk_distributed", _HNSW_TOPK_SQL)
 def ann_hnsw_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ann_hnsw_topk with the broadcast-index local serve FORCED OFF:
+    """ann_hnsw_topk with the broadcast-index local serve turned OFF:
     the iterative join-per-hop layered walk — the plan any
     past-the-byte-gate corpus takes. Same rows, same oracle."""
-    return _with_env_forced(
-        ann_hnsw_topk, spark, sf_dir, {"SPARK_GRAFT_ANN_LOCAL_SERVE": "0"})
+    return _ann_hnsw_topk(spark, sf_dir, local_max_rows=0)
 
 
 @register("graph_pagerank_directed_sinks_distributed",
           _pagerank_directed_sql())
 def graph_pagerank_directed_sinks_distributed(
         spark: SparkSession, sf_dir: str) -> DataFrame:
-    """graph_pagerank_directed_sinks with the driver fast path FORCED
+    """graph_pagerank_directed_sinks with the driver fast path turned
     OFF: the distributed superstep loop (join + groupBy per iteration)
     any past-the-gate graph takes. Same rows, same oracle."""
-    return _with_env_forced(
-        graph_pagerank_directed_sinks, spark, sf_dir,
-        {"SPARK_GRAFT_PR_LOCAL_EDGES": "0"})
+    return _graph_pagerank_directed_sinks(spark, sf_dir, local_max_edges=0)

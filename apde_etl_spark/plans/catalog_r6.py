@@ -292,11 +292,19 @@ def graph_pagerank_directed_sinks(spark: SparkSession, sf_dir: str) -> DataFrame
     (asserted in tests/test_graph.py). Per iteration the extra cost is
     one |V_sink|-row aggregate broadcast as a 1-row literal; everything
     else is the same join + groupBy on the node id."""
+    return _graph_pagerank_directed_sinks(spark, sf_dir)
+
+
+def _graph_pagerank_directed_sinks(
+        spark: SparkSession, sf_dir: str,
+        local_max_edges: int | None = None) -> DataFrame:
+    """Body of :func:`graph_pagerank_directed_sinks`; ``local_max_edges``
+    is the driver fast-path gate (``0`` forces the distributed loop)."""
     edges = tracked_persist(_edges_directed(spark, sf_dir), scope="graph")
     pr = pagerank_integer(
         edges, iters=_PR_ITERS, scale=_PR_SCALE,
         dangling="redistribute", cache_scope="graph",
-        broadcast_below=2_000_000)
+        broadcast_below=2_000_000, local_max_edges=local_max_edges)
     return pr.select("node", F.col("rank").alias("pr_rank"))
 
 

@@ -217,10 +217,19 @@ def ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     upper-layer adjacencies, then the flat layer-0 beam walk seeded by
     the descent result + stratified entries. The serve plan reads ONLY
     the frozen graph/graph_upper/graph_meta/layer_meta parquet + the
-    two input frames — zero Python stages, zero construction scans
-    (asserted in tests/test_plan_shapes.py). Oracle rebuilds levels and
+    two input frames — zero construction scans; under the local-serve
+    gate it is one Arrow stage, past it (ann_hnsw_topk_distributed) a
+    join-per-hop walk with zero Python stages (both asserted in
+    tests/test_plan_shapes.py). Oracle rebuilds levels and
     per-layer adjacencies from first principles and unrolls the
     identical descent + hops."""
+    return _ann_hnsw_topk(spark, sf_dir)
+
+
+def _ann_hnsw_topk(spark: SparkSession, sf_dir: str,
+                   local_max_rows: int | None = None) -> DataFrame:
+    """Body of :func:`ann_hnsw_topk`; ``local_max_rows`` is the serve's
+    local-serve row gate (``0`` forces the distributed walk)."""
     from apde_etl_spark.functions.core import round_half_away
     from apde_etl_spark.operators.ann_index import ann_graph_search_layered
 
@@ -229,7 +238,8 @@ def ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.expr(_H_QUERY_PRED))
     out = ann_graph_search_layered(
         spark, d, queries, emb, k=_H_K, beam=_H_BEAM, hops=_H_HOPS,
-        descend_beam=_H_DBEAM, hops_per_layer=_H_HPL)
+        descend_beam=_H_DBEAM, hops_per_layer=_H_HPL,
+        local_max_rows=local_max_rows)
     return out.select(
         "query_id", "rank", "vec_id",
         round_half_away(F.col("cosine_raw"), 6).alias("cosine_sim"),

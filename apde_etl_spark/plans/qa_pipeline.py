@@ -58,8 +58,8 @@ class QaConfig:
     top_k: int = 8                           # categorical cap (:1056)
     digits_mean: int = 2
     digits_prop: int = 3
-    exact_median: bool = True                # False -> GK-sketch quantile
-    median_mode: str | None = None           # "buffer" | "sketch" | "histogram"
+    median_mode: str = "buffer"              # "buffer" | "sketch" (GK quantile)
+                                             # | "histogram"
                                              # (histogram: exact medians with
                                              # bounded state — the 100 TB path)
     time_expr: Column | None = None          # optional derived time axis
@@ -151,7 +151,7 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
     gate_cols = classes.numeric + classes.datetime
     prof = P.combined_profile(
         base, "__time", classes, gate_cols=gate_cols,
-        exact_median=config.exact_median, median_mode=config.median_mode,
+        median_mode=config.median_mode,
     )
 
     # A6 — demotion decision from the sketches (SURVEY §2.10.6): HLL rsd

@@ -269,12 +269,14 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
                                       monkeypatch):
     """The size-gated broadcast-index serve (round 10) must reproduce
     the iterative join-per-hop walk BIT-FOR-BIT — flat and layered,
-    including the float64 cosines — and must respect its gates
-    (SPARK_GRAFT_ANN_LOCAL_SERVE=0 and SPARK_GRAFT_ANN_BCAST_ROWS)."""
+    including the float64 cosines — and must respect its row gate
+    (LOCAL_SERVE_MAX_ROWS, and ``local_max_rows`` per call)."""
+    import shutil
     import struct
 
     import pyspark.sql.functions as F
 
+    from apde_etl_spark.operators import ann_index
     from apde_etl_spark.operators.ann_index import (
         ann_graph_search,
         ann_graph_search_layered,
@@ -292,28 +294,44 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
             tuple(struct.pack(">d", v).hex() if isinstance(v, float)
                   else v for v in r) for r in rows)
 
+    results = {}
     for fn, kw in [
         (ann_graph_search, dict(k=3, beam=6, hops=2)),
         (ann_graph_search_layered,
          dict(k=3, beam=6, hops=2, descend_beam=4, hops_per_layer=1)),
     ]:
-        monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
         fast_df = fn(spark, d, queries, emb, **kw)
         # the fast path IS taken: single Arrow stage, no per-hop joins
         plan = fast_df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan and "Join" not in plan
         fast = fast_df.collect()
-        monkeypatch.setenv("SPARK_GRAFT_ANN_LOCAL_SERVE", "0")
-        it_df = fn(spark, d, queries, emb, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(ann_index, "LOCAL_SERVE_MAX_ROWS", 0)
+            it_df = fn(spark, d, queries, emb, **kw)
         assert "MapInPandas" not in \
             it_df._jdf.queryExecution().executedPlan().toString()
         assert canon(fast) == canon(it_df.collect())
-    # rows gate: a cap below the corpus size forces the iterative path
-    monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_ANN_BCAST_ROWS", "3")
+        results[fn] = canon(fast)
+    # rows gate: a cap below the corpus size forces the iterative path,
+    # as module constant and as the per-call argument
+    gated = ann_graph_search_layered(spark, d, queries, emb, k=3, beam=6,
+                                     hops=2, local_max_rows=3)
+    assert "MapInPandas" not in \
+        gated._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(ann_index, "LOCAL_SERVE_MAX_ROWS", 3)
     gated = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2)
     assert "MapInPandas" not in \
         gated._jdf.queryExecution().executedPlan().toString()
+    # the flat walk skips the descent and never reads the layer
+    # artifacts: with them deleted it serves the same rows on both paths
+    for sub in ("layer_meta", "graph_upper"):
+        shutil.rmtree(f"{d}/{sub}")
+    monkeypatch.undo()
+    flat = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2)
+    assert canon(flat.collect()) == results[ann_graph_search]
+    monkeypatch.setattr(ann_index, "LOCAL_SERVE_MAX_ROWS", 0)
+    flat_it = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2)
+    assert canon(flat_it.collect()) == results[ann_graph_search]
 
 
 def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
@@ -327,6 +345,7 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     iterative path, which preserves the original id type)."""
     import pyspark.sql.functions as F
 
+    from apde_etl_spark.operators import ann_index
     from apde_etl_spark.operators.ann_index import (
         ann_graph_search,
         build_knn_graph,
@@ -336,7 +355,6 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     d = str(tmp_path / "bidx")
     build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
 
     def is_fast(df):
         return "MapInPandas" in \
@@ -347,10 +365,10 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
                                     k=3, beam=6, hops=2))
     # (1) byte budget: this corpus is n x dim x 8B + slack; a budget
     # below that declines even though the row gate (200k) admits it
-    monkeypatch.setenv("SPARK_GRAFT_ANN_BCAST_BYTES", "1024")
-    assert not is_fast(ann_graph_search(spark, d, queries, emb,
-                                        k=3, beam=6, hops=2))
-    monkeypatch.delenv("SPARK_GRAFT_ANN_BCAST_BYTES", raising=False)
+    with monkeypatch.context() as m:
+        m.setattr(ann_index, "LOCAL_SERVE_MAX_BYTES", 1024)
+        assert not is_fast(ann_graph_search(spark, d, queries, emb,
+                                            k=3, beam=6, hops=2))
     # (2) ragged queries: one query vector truncated to a shorter dim
     ragged = queries.select(
         "vec_id",

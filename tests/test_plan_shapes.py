@@ -404,7 +404,9 @@ def test_pagerank_iteration_shuffles_on_node_only(spark, sf_dir, qs,
     SortMergeJoin towers at test SF. (Distributed loop forced: under
     the round-10 size gate this entry serves from the driver fast
     path, whose plan is a local scan.)"""
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "0")
+    from apde_etl_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "PAGERANK_LOCAL_MAX_EDGES", 0)
     plan = _plan(qs["graph_pagerank_copurchase"](spark, sf_dir))
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -458,20 +460,20 @@ def test_q22_catalyst_decorrelates_subqueries(spark, sf_dir, qs):
     assert plan.count("Scan parquet") <= 6
 
 
-def test_pagerank_checkpoint_bounds_plan_depth(spark, monkeypatch):
+def test_pagerank_checkpoint_bounds_plan_depth(spark):
     """Iterative lineage must not grow unboundedly: with
     checkpoint_every the physical plan of the FINAL iteration hangs off
     a checkpoint scan, so its size is O(k), independent of total
     iteration count — the property that keeps 25+-iteration runs
     plannable. (Distributed loop forced past the round-10 fast path —
     the property under test is the loop's lineage, not the gate.)"""
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "0")
     from apde_etl_spark.operators.graph import pagerank_integer
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long")
-    deep = pagerank_integer(edges, iters=9)
-    shallow = pagerank_integer(edges, iters=9, checkpoint_every=3)
+    deep = pagerank_integer(edges, iters=9, local_max_edges=0)
+    shallow = pagerank_integer(edges, iters=9, checkpoint_every=3,
+                               local_max_edges=0)
     p_deep, p_shallow = _plan(deep), _plan(shallow)
     # un-truncated: plan grows with iters; truncated: bounded well below
     assert len(p_shallow) < len(p_deep) / 2
@@ -597,26 +599,24 @@ def test_q16_not_in_runs_as_broadcast_anti_join(spark, sf_dir, qs):
     assert "HashAggregate" in plan
 
 
-def test_ann_graph_serve_plan_reads_frozen_artifacts(spark, sf_dir, qs):
+def test_ann_graph_serve_plan_reads_frozen_artifacts(spark, sf_dir, qs,
+                                                    monkeypatch):
     """The beam-search serve plan must contain ZERO construction work
     and no cartesian all-pairs. Under the round-10 size gate the serve
     is the broadcast-index walk — ONE Arrow stage over the query batch,
-    no joins at all; past the gate (forced here via env) candidates
-    come from equi-joins against the persisted adjacency with no
-    Python stage (the k-NN build's exact_topk_pairs is mapInPandas —
-    it must not appear at query time)."""
+    no joins at all; past the gate (forced here via the module
+    constant) candidates come from equi-joins against the persisted
+    adjacency with no Python stage (the k-NN build's exact_topk_pairs
+    is mapInPandas — it must not appear at query time)."""
+    from apde_etl_spark.operators import ann_index
+
     plan = _plan(qs["ann_graph_topk"](spark, sf_dir))
     assert "MapInPandas" in plan and "Join" not in plan
     assert "CartesianProduct" not in plan
-    import os
-
-    os.environ["SPARK_GRAFT_ANN_LOCAL_SERVE"] = "0"
-    try:
-        plan = _plan(qs["ann_graph_topk"](spark, sf_dir))
-        assert "EvalPython" not in plan and "MapInPandas" not in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        del os.environ["SPARK_GRAFT_ANN_LOCAL_SERVE"]
+    monkeypatch.setattr(ann_index, "LOCAL_SERVE_MAX_ROWS", 0)
+    plan = _plan(qs["ann_graph_topk"](spark, sf_dir))
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_kmv_sketch_uses_window_group_limit(spark, sf_dir, qs):
@@ -650,20 +650,16 @@ def test_ann_hnsw_serve_plan_reads_frozen_artifacts(spark, sf_dir, qs):
     """The layered (HNSW-class) serve plan must contain ZERO
     construction work, like the flat walk: no Python/Arrow stage (the
     per-layer exact k-NN builds are mapInPandas — build-time only) and
-    no cartesian all-pairs; descent candidates come from equi-joins
-    against the persisted graph_upper adjacency."""
+    no cartesian all-pairs. Under the size gate the default entry is
+    the one-stage broadcast-index walk; its distributed twin (gate 0)
+    takes descent candidates from equi-joins against the persisted
+    graph_upper adjacency."""
     plan = _plan(qs["ann_hnsw_topk"](spark, sf_dir))
     assert "MapInPandas" in plan and "Join" not in plan
     assert "CartesianProduct" not in plan
-    import os
-
-    os.environ["SPARK_GRAFT_ANN_LOCAL_SERVE"] = "0"
-    try:
-        plan = _plan(qs["ann_hnsw_topk"](spark, sf_dir))
-        assert "EvalPython" not in plan and "MapInPandas" not in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        del os.environ["SPARK_GRAFT_ANN_LOCAL_SERVE"]
+    plan = _plan(qs["ann_hnsw_topk_distributed"](spark, sf_dir))
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_kmv_difference_serves_from_broadcast_sketch_state(spark, sf_dir, qs):

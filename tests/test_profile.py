@@ -171,12 +171,12 @@ def test_top_k_dense_rank_ties_keep_all_members(spark):
 
 
 def test_approx_median_escape_hatch(synth):
-    """exact_median=False swaps the exact percentile for the GK sketch
+    """median_mode="sketch" swaps the exact percentile for the GK sketch
     (fixed aggregate state at 100 TB); at accuracy 10000 on a 4k-row
     fixture the sketch result must agree with the exact one everywhere
     else and be within tight tolerance on the median itself."""
     exact = run_qa_pipeline(synth, QaConfig(time_var="myyear"))
-    approx = run_qa_pipeline(synth, QaConfig(time_var="myyear", exact_median=False))
+    approx = run_qa_pipeline(synth, QaConfig(time_var="myyear", median_mode="sketch"))
 
     def meds(res):
         return {
